@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Controlled A/B of doc-range group-eval sharding -> BENCH/SHARD_AB.json.
 
-Same methodology as BENCH/tid_ab.py: the two variants (sharding off vs
+Same methodology as BENCH/TID_AB.json: the two variants (sharding off vs
 auto) alternate back-to-back in ONE window against the SAME persisted
 index, so one-sided host noise cancels out of the comparison even when the
 absolute numbers drift between windows. Sharding only engages above one

@@ -15,13 +15,17 @@ stage1 (tokenize + doc ids + stats)
     ``doc_dict`` + per-(doc,term) ``tf`` + corpus ``stats``.
 
 stage2 (shuffle-merge + compress)
-    two-phase salted aggregation: partial posting encode per (term,
-    range-chunk of doc ids) bounds the per-task work for hot/skewed terms
-    (the reference has NO skew handling — hot terms just grow a RAM hashmap,
-    SURVEY.md §4 O10); per-term merge is cheap block-list concatenation
-    because blocks are self-contained. Postings are delta+varint compressed
-    with block-max metadata (SURVEY.md §4 O11) and written partitioned by a
-    term hash bucket ``tb`` for partition-pruned query scans.
+    one of two encodes, chosen from what the stage measures anyway (the
+    term dictionary's exact largest-bucket posting count and vocabulary
+    size): ``shuffle-encode`` ships raw (tid, doc_id, meta) rows once by
+    term bucket and encodes each whole bucket in one pass; ``local-merge``
+    encodes a local index per tf partition and merges the compressed
+    per-term chunks per bucket, so per-task memory is bounded by partition
+    size when a bucket (e.g. one very hot term) outgrows a worker. The
+    reference has NO skew handling — hot terms just grow a RAM hashmap,
+    SURVEY.md §4 O10. Postings are delta+varint compressed with block-max
+    metadata (SURVEY.md §4 O11) and written partitioned by a term hash
+    bucket ``tb`` for partition-pruned query scans.
 
 stage3 (summaries)
     per-bucket term bloom filters using the reference's exact word hash
@@ -36,13 +40,13 @@ skipped on resume when its lineage key matches.
 
 Scale notes (100 TB / 10^12 files): the only global shuffle of document
 content is the range partition for doc-id assignment; everything after
-``tf`` moves only (doc_id, term, tf, dl) tuples. Hot-term encode cost is
-bounded by ``n_docs / salt_chunks`` per task; AQE handles residual skew.
+``tf`` moves only (doc_id, term, tf, dl) tuples. A bucket too large for one
+worker switches stage 2 to ``local-merge``, whose per-task encode is
+bounded by the tf partition size.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 import time
@@ -56,13 +60,7 @@ from pyspark.sql import functions as F
 from .. import BLOCK_SIZE, FILTER_BITS
 from ..hashword import build_filter
 from . import checkpoint as ckpt
-from .codec import (
-    block_max_saturation,
-    decode_postings,
-    encode_postings,
-    encode_postings_many,
-    merge_encoded_chunks,
-)
+from .codec import decode_postings, encode_postings_many, merge_encoded_chunks
 
 MARKER_TERM = ""  # per-doc marker row; real tokens are always len >= 3
 
@@ -410,38 +408,16 @@ def heal_swap(path: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def _merge_term_chunks(
-    term, chunk_rows: list[dict], block_size: int, avgdl: float
-) -> dict:
-    """Merge one term's per-chunk encodings (chunk_rows ordered by chunk).
-    Small merged lists (many 1-2 doc fragments) are decoded and re-encoded
-    into dense sorted blocks; larger ones are pure blob concatenation with
-    offset shifts (blocks are self-contained)."""
-    df_total = sum(int(c["df"]) for c in chunk_rows)
-    if len(chunk_rows) > 1 and df_total <= 4 * block_size:
-        parts = [
-            decode_postings(
-                c["ids_blob"], c["tfs_blob"], c["dls_blob"],
-                c["block_firsts"], c["block_lens"],
-            )
-            for c in chunk_rows
-        ]
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        o = np.argsort(ids, kind="stable")
-        ids, tfs, dls = ids[o], tfs[o], dls[o]
-        enc = encode_postings(ids, tfs, dls, block_size)
-        bstarts = np.cumsum(
-            np.concatenate(([0], np.asarray(enc["block_lens"][:-1], np.int64)))
-        )
-        bmax = block_max_saturation(tfs, dls, avgdl, bstarts).tolist()
-    else:
-        enc = merge_encoded_chunks(chunk_rows)
-        bmax = [x for c in chunk_rows for x in c["block_max"]]
+def _merge_term_chunks(term, chunk_rows: list[dict]) -> dict:
+    """Merge one BIG term's per-chunk encodings (chunk_rows ordered by
+    chunk): pure blob concatenation with offset shifts, since blocks are
+    self-contained. Small multi-chunk terms, whose fragments would yield
+    many 1-2 doc blocks, are re-encoded in batch by
+    ``_merge_small_terms_batch`` instead."""
+    enc = merge_encoded_chunks(chunk_rows)
     return {
         "term": term,
-        "df": df_total,
+        "df": sum(int(c["df"]) for c in chunk_rows),
         "ids": enc["ids_blob"],
         "tfs": enc["tfs_blob"],
         "dls": enc["dls_blob"],
@@ -451,7 +427,7 @@ def _merge_term_chunks(
         "ids_offs": enc["ids_offs"],
         "tfs_offs": enc["tfs_offs"],
         "dls_offs": enc["dls_offs"],
-        "block_max": bmax,
+        "block_max": [x for c in chunk_rows for x in c["block_max"]],
     }
 
 
@@ -533,13 +509,23 @@ PARTIAL_SCHEMA = (
 )
 
 
-def _postings_arrow_schema():
-    """PyArrow twin of ``POSTINGS_SCHEMA + ", tb int"`` (mapInArrow output)."""
+TID_POSTINGS_SCHEMA = (
+    "tid long, df long, ids binary, tfs binary, dls binary, "
+    "block_firsts array<long>, block_lasts array<long>, block_lens array<int>, "
+    "ids_offs array<long>, tfs_offs array<long>, dls_offs array<long>, "
+    "block_max array<double>, tb int"
+)
+
+
+def _tid_postings_arrow_schema():
+    """PyArrow twin of ``TID_POSTINGS_SCHEMA``: the tid-keyed intermediate of
+    the shuffle-encode path — term STRINGS never cross into Python; the final
+    term column comes from a broadcast dictionary join on ``tid``."""
     import pyarrow as pa
 
     return pa.schema(
         [
-            ("term", pa.string()),
+            ("tid", pa.int64()),
             ("df", pa.int64()),
             ("ids", pa.binary()),
             ("tfs", pa.binary()),
@@ -556,22 +542,16 @@ def _postings_arrow_schema():
     )
 
 
-TID_POSTINGS_SCHEMA = (
-    "tid long, df long, ids binary, tfs binary, dls binary, "
-    "block_firsts array<long>, block_lasts array<long>, block_lens array<int>, "
-    "ids_offs array<long>, tfs_offs array<long>, dls_offs array<long>, "
-    "block_max array<double>, tb int"
-)
-
-
-def _tid_postings_arrow_schema():
-    """PyArrow twin of ``TID_POSTINGS_SCHEMA``: the tid-keyed intermediate of
-    the shuffle-encode path — term STRINGS never cross into Python; the final
-    term column comes from a broadcast dictionary join on ``tid``."""
-    import pyarrow as pa
-
-    base = _postings_arrow_schema()
-    return pa.schema([pa.field("tid", pa.int64())] + [base.field(i) for i in range(1, len(base))])
+# stage-2 encode choice (see IndexBuilder._stage2): one whole-bucket encode
+# holds ~48 B per raw posting (ids + meta + sort/order temporaries), and the
+# tid dictionary is driver-collected and broadcast — above 20M terms (a few
+# hundred MB) the build takes the memory-bounded local-merge encode instead
+BUCKET_ROW_BYTES = 48
+MAX_DICT_TERMS = 20_000_000
+# Arrow batch rows inside stage 2: the tf stream is slim fixed-width rows,
+# so 64k-row batches cut per-batch Arrow/pandas overhead ~16x (the session
+# default stays small for fat content rows)
+STAGE2_ARROW_BATCH = 65536
 
 
 @dataclass
@@ -599,27 +579,36 @@ class IndexPaths:
         return os.path.join(self.index_dir, "summaries")
 
 
+LAYOUT_ERROR = "index predates the r3 layout: rebuild it"
+
+
+def check_layout(paths: IndexPaths) -> None:
+    """Refuse an index written before the current on-disk layout, with one
+    clear error instead of per-reader fallbacks. The engine, group-eval and
+    the incremental updater rely on all three of: the routing modulus
+    persisted in the stage-2 metrics (``n_buckets``), per-block doc-id upper
+    bounds in postings (``block_lasts``), and the ``global`` term-bloom
+    summary row. Reads parquet footers and the one-file summaries' kind
+    column on the driver — no Spark job. A missing table raises
+    FileNotFoundError; an older layout ``ValueError(LAYOUT_ERROR)``."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    kinds = pq.read_table(paths.summaries, columns=["kind"])["kind"].to_pylist()
+    post_cols = ds.dataset(paths.postings, partitioning="hive").schema.names
+    if not (
+        "global" in kinds
+        and "block_lasts" in post_cols
+        and "n_buckets" in ckpt.read_metrics(paths.index_dir, "stage2_postings")
+    ):
+        raise ValueError(LAYOUT_ERROR)
+
+
 @dataclass
 class IndexBuilder:
     spark: SparkSession
     index_dir: str
     n_buckets: int = 32          # postings partition buckets (term-hash)
-    # 'auto' (default): 'shuffle-encode' when the LARGEST bucket's raw bytes
-    #   (exact, from the stage-2a dictionary pass; mean-estimate pre-gate
-    #   first) fit a single worker, else 'local-merge'. 'shuffle-encode':
-    #   raw tf shuffled once by term bucket (identity-routed, one bucket per
-    #   partition) as (tid, doc_id, meta) int64 rows — term strings swapped
-    #   for dense dictionary ids by a broadcast map-join before the exchange
-    #   and restored on the per-term output rows after it — then ONE
-    #   Arrow-native whole-bucket encode: no chunk fragments, no merge
-    #   stage, a single string-free Python crossing. 'local-merge': per-partition
-    #   local index -> compressed-blob shuffle -> per-bucket merge (per-task
-    #   memory bounded by partition size — the fallback when a bucket
-    #   outgrows one worker). 'salted-groupby': explicit df-driven hot-term
-    #   salting (kept for adversarial single-term skew experiments).
-    strategy: str = "auto"
-    salt_chunks: int = 8         # doc-id range chunks for hot-term salting
-    hot_df_threshold: int | None = None  # df above which a term is salted; None -> auto
     block_size: int = BLOCK_SIZE
     validate_sha: bool = True
     keep_tf: bool = True         # False: delete the (postings-sized) stage-1
@@ -637,11 +626,8 @@ class IndexBuilder:
         key = {
             "input": input_token,
             "n_buckets": self.n_buckets,
-            "salt_chunks": self.salt_chunks,
             "block_size": self.block_size,
             "validate_sha": self.validate_sha,
-            "hot_df_threshold": self.hot_df_threshold,
-            "strategy": self.strategy,
             "schema": 5,  # r3: summaries rollup row; tf meta packing
         }
         lineage1 = {"key": {**key, "stage": 1}}
@@ -859,53 +845,33 @@ class IndexBuilder:
 
     # ------------------------------------------------------------------
     def _stage2(self, paths: IndexPaths, lineage: dict) -> None:
-        """Selective salting: the two-phase (partial encode per doc-id range
-        chunk, then per-term merge) costs an extra shuffle, so it is applied
-        ONLY to hot terms — chosen from observed df stats (SURVEY.md §4 O10),
-        the df aggregate being needed for the dictionary anyway. Cold terms
-        (the overwhelming majority of the dictionary) take the single-shuffle
-        path. The reference has no skew handling at all (hot terms just grow
-        a RAM hashmap)."""
+        """Shuffle-merge + compress with one of two encodes, chosen in code
+        from measurements the stage takes anyway (``_stage2_inner``):
+
+        - ``shuffle-encode``: raw tf shuffled ONCE by term bucket as
+          (tid, doc_id, meta) int64 rows, then one whole-bucket encode per
+          partition — no chunk fragments, no merge stage;
+        - ``local-merge``: a local index per tf partition, a shuffle of the
+          compressed per-term chunks, a per-bucket merge — per-task memory
+          bounded by partition size, not bucket size.
+
+        Skew is handled where it is measured: a bucket whose exact posting
+        count (one very hot term, or a skewed vocabulary) would not fit one
+        worker sends the whole stage to ``local-merge``, with no standing
+        hot-term path. The reference has no skew handling at all (hot terms
+        just grow a RAM hashmap)."""
         t0 = time.time()
         spark = self.spark
-        # stage-scoped tuning, restored on exit:
-        # - bigger Arrow batches: the tf stream is slim fixed-width rows, so
-        #   64k-row batches cut per-batch Arrow/pandas overhead ~16x (the
-        #   session default stays small for fat content rows);
-        # - shuffle partitions = n_buckets and no AQE coalescing: the merge
-        #   groupBy lands EXACTLY one bucket per reduce task — AQE would
-        #   coalesce small buckets into few tasks whose skew makes the merge
-        #   a straggler at higher core counts.
-        scoped = {
-            "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
-                "SPARK_GRAFT_S2_ARROW_BATCH", "65536"
-            ),
-            # opt-in knobs (A/B'd at 800k: the session defaults measured
-            # best at local[4]; pinning merge partitions to n_buckets only
-            # pays off when cores >> buckets)
-            "spark.sql.shuffle.partitions": os.environ.get(
-                "SPARK_GRAFT_S2_SHUFFLE_PARTS", ""
-            ),
-            # flag semantics: ANY non-empty value disables AQE coalescing
-            # (the name invites '1', which as a passthrough would ENABLE it —
-            # ADVICE r3)
-            "spark.sql.adaptive.coalescePartitions.enabled": (
-                "false" if os.environ.get("SPARK_GRAFT_S2_AQE_COALESCE_OFF") else ""
-            ),
-        }
-        scoped = {k: v for k, v in scoped.items() if v}
-        prev_conf = {}
-        for k, v in scoped.items():
-            prev_conf[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, str(STAGE2_ARROW_BATCH))
         try:
             self._stage2_inner(paths, lineage, t0)
         finally:
-            for k, v in prev_conf.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
     def _build_term_dict(self, tf: DataFrame, n_buckets: int) -> dict:
         """Stage-2a term dictionary: dense int64 term ids ordered by
@@ -928,14 +894,14 @@ class IndexBuilder:
         distributed (identity-routed bucket shuffle + per-partition
         counters), no single-task rank. The per-bucket df sums come from
         the same pass and give the EXACT largest-bucket bytes for the
-        'auto' memory guard (the old cross-bucket MEAN under-estimated a
-        skewed vocabulary by up to n_buckets×, ADVICE r4).
+        encode choice (a cross-bucket MEAN under-estimates a skewed
+        vocabulary by up to n_buckets×).
 
         The dictionary is broadcast (driver-collected) for the tf-side map
-        join: vocabulary grows ~Heaps-sublinearly with the corpus, and the
-        SPARK_GRAFT_S2_MAX_DICT_TERMS gate (default 20M terms ≈ a few
-        hundred MB broadcast) falls back to the legacy string-shuffle path
-        above it rather than OOM-ing the driver.
+        join: vocabulary grows ~Heaps-sublinearly with the corpus, and above
+        ``MAX_DICT_TERMS`` (≈ a few hundred MB broadcast) the stage takes
+        ``local-merge``, which needs no dictionary, rather than OOM-ing the
+        driver.
 
         Returns {dict_df (persisted — caller unpersists), boffs, n_vocab,
         max_bucket_rows, seconds}."""
@@ -1009,8 +975,7 @@ class IndexBuilder:
     def _stage2_inner(self, paths: IndexPaths, lineage: dict, t0: float) -> None:
         spark = self.spark
         stats = spark.read.parquet(paths.stats).collect()[0]
-        n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-        chunk_span = max(1, math.ceil(n_docs / self.salt_chunks))
+        avgdl = float(stats["avgdl"])
         block_size = self.block_size
         n_buckets = self.n_buckets
 
@@ -1030,90 +995,35 @@ class IndexBuilder:
             .filter(F.col("term") != MARKER_TERM)
         )
 
-        # 'auto' resolution + memory guard for the whole-bucket encode: one
-        # worker holds ONE bucket's raw rows plus NumPy temporaries
-        # (~48 B/row bounds ids + meta + sort/order temporaries). The gate
-        # is EXACT: a cheap mean-estimate pre-check skips the dictionary
-        # jobs when even the AVERAGE bucket exceeds the cap; otherwise the
-        # stage-2a dictionary pass (needed by shuffle-encode anyway) yields
-        # the true LARGEST bucket's posting count — a skewed vocabulary can
-        # exceed the mean by up to n_buckets×, so gating on the mean could
-        # pick shuffle-encode and then OOM one whole-bucket encode (ADVICE
-        # r4). Above the cap, local-merge bounds per-task memory by
-        # PARTITION size instead of bucket size. At corpus scale n_buckets
-        # grows with the data (the bucket is the shard unit), keeping
-        # buckets under the cap.
-        strategy = self.strategy
+        # The encode choice. shuffle-encode holds ONE bucket's raw rows plus
+        # NumPy temporaries in one worker, so it is taken only when the
+        # LARGEST bucket fits the cap: a cheap mean-estimate pre-check skips
+        # the dictionary jobs when even the AVERAGE bucket exceeds it;
+        # otherwise the stage-2a dictionary pass (needed by shuffle-encode
+        # anyway) yields the exact largest bucket — a skewed vocabulary can
+        # exceed the mean by up to n_buckets×. The same pass counts the
+        # vocabulary, which bounds the driver-broadcast dictionary. Failing
+        # either gate, local-merge bounds per-task memory by PARTITION size
+        # instead. At corpus scale n_buckets grows with the data (the bucket
+        # is the shard unit), keeping buckets under the cap.
+        strategy = "local-merge"
         dict_info: dict | None = None
         cap = int(os.environ.get("SPARK_GRAFT_S2_MAX_BUCKET_BYTES", str(4 << 30)))
-        if strategy in ("auto", "shuffle-encode"):
-            mean_est = int(stats["total_tokens"] or 0) * 48 // max(1, n_buckets)
-            if strategy == "auto" and mean_est > cap:
-                strategy = "local-merge"
-            else:
-                dict_info = self._build_term_dict(tf, n_buckets)
-                if strategy == "auto":
-                    max_bucket_bytes = dict_info["max_bucket_rows"] * 48
-                    strategy = (
-                        "shuffle-encode" if max_bucket_bytes <= cap else "local-merge"
-                    )
-        self._resolved_strategy = strategy
-
-        hot_terms: list[str] = []
-        if strategy == "salted-groupby":
-            # hot iff a single-task encode would exceed ~2 salt chunks of docs
-            hot_threshold = (
-                self.hot_df_threshold
-                if self.hot_df_threshold is not None
-                else max(50_000, 2 * chunk_span)
-            )
-            df_tbl = tf.groupBy("term").agg(F.count("*").alias("df"))
-            hot_terms = [
-                r["term"] for r in df_tbl.filter(F.col("df") >= hot_threshold).collect()
-            ]
-            tf = tf.withColumn("chunk", (F.col("doc_id") / F.lit(chunk_span)).cast("int"))
-        else:
-            hot_threshold = -1
-
-        def _encode(term: str, pdf: pd.DataFrame) -> dict:
-            pdf = pdf.sort_values("doc_id", kind="mergesort")
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            tfs, dls = unpack_meta(pdf["meta"].to_numpy(np.int64))
-            enc = encode_postings(ids, tfs, dls, block_size)
-            starts = np.cumsum(np.concatenate(([0], np.asarray(enc["block_lens"][:-1], np.int64))))
-            bmax = block_max_saturation(tfs, dls, avgdl, starts)
-            return {
-                "term": term,
-                "df": int(ids.size),
-                "ids": enc["ids_blob"],
-                "tfs": enc["tfs_blob"],
-                "dls": enc["dls_blob"],
-                "block_firsts": enc["block_firsts"],
-                "block_lasts": enc["block_lasts"],
-                "block_lens": enc["block_lens"],
-                "ids_offs": enc["ids_offs"],
-                "tfs_offs": enc["tfs_offs"],
-                "dls_offs": enc["dls_offs"],
-                "block_max": bmax.tolist(),
-            }
-
-        def encode_partial(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            term, chunk = key
-            row = _encode(term, pdf)
-            row["chunk"] = int(chunk)
-            return pd.DataFrame([row])
-
-        def encode_whole(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            (term,) = key
-            return pd.DataFrame([_encode(term, pdf)])
+        mean_est = int(stats["total_tokens"] or 0) * BUCKET_ROW_BYTES // max(1, n_buckets)
+        if mean_est <= cap:
+            dict_info = self._build_term_dict(tf, n_buckets)
+            if (
+                dict_info["max_bucket_rows"] * BUCKET_ROW_BYTES <= cap
+                and dict_info["n_vocab"] <= MAX_DICT_TERMS
+            ):
+                strategy = "shuffle-encode"
 
         def encode_local(batches):
             """Local inverted index per tf partition: sort the partition's
             rows by (term, doc_id) and encode per-term block runs — NO
             shuffle of raw postings; only compressed blobs move to the
-            merge. The doc-partitioning itself is the salt: a hot term's
-            encode work is bounded by the partition size, spread over every
-            partition that contains it."""
+            merge. A hot term's encode work is bounded by the partition
+            size, spread over every partition that contains it."""
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
@@ -1164,86 +1074,6 @@ class IndexBuilder:
                     "block_max": cols["block_max"],
                 }
             )
-
-        def encode_bucket_arrow(batches):
-            """shuffle-encode strategy: the partition holds EVERY row of its
-            term bucket, so one dictionary-encode + sort + encode_postings_many
-            yields the final postings rows — no chunk fragments, no merge
-            stage, a single Python crossing for the whole of stage 2.
-
-            Arrow-NATIVE on purpose (mapInArrow, not mapInPandas): the input
-            is millions of slim rows per bucket, and converting their term
-            strings to pandas object arrays was the dominant cost of the
-            pandas variant (per-string Python object allocation, measured as
-            the memory-bandwidth hot spot that anti-scaled at high core
-            counts). Here the strings stay in Arrow buffers end to end:
-            ``dictionary_encode`` (C++) yields int32 codes + a unique-string
-            dictionary; NumPy touches only fixed-width columns; just the
-            per-TERM outputs (a few thousand rows) materialize Python
-            objects."""
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
-            term_chunks = tbl.column("term").chunks
-            term_arr = (
-                term_chunks[0]
-                if len(term_chunks) == 1
-                else pa.concat_arrays(term_chunks)
-            )
-            denc = pc.dictionary_encode(term_arr)
-            codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            uniq = denc.dictionary
-            ids = np.ascontiguousarray(tbl.column("doc_id").to_numpy(), dtype=np.int64)
-            meta = np.ascontiguousarray(tbl.column("meta").to_numpy(), dtype=np.int64)
-            tbs = tbl.column("tb").to_numpy()
-            nuq = len(uniq)
-            # (term, doc_id) sort via one composite int64 key when both fit
-            # (codes < 2^22, ids < 2^41 — up to 2T docs), else lexsort.
-            # (doc, term) pairs are unique, so the key is unique and the
-            # default (unstable, faster) sort is deterministic.
-            if nuq < (1 << 22) and (ids.size == 0 or int(ids.max()) < (1 << 41)):
-                order = np.argsort((codes << 41) | ids)
-            else:
-                order = np.lexsort((ids, codes))
-            codes_s, ids_s = codes[order], ids[order]
-            # ONE gather of the packed meta column, unpack after (saves a
-            # full-size random-access pass vs gathering tf and dl separately)
-            tfs_s, dls_s = unpack_meta(meta[order])
-            starts = np.concatenate(([0], np.flatnonzero(np.diff(codes_s)) + 1))
-            cols = encode_postings_many(
-                ids_s, tfs_s, dls_s, starts, block_size, avgdl=avgdl, flat=True
-            )
-            # zero-copy list columns: one offsets array + the flat values
-            # (a per-term np.split + pa.array(list) pays ~10^5 Python view
-            # allocations per bucket, measured as a visible build-stage cost)
-            boffs = pa.array(
-                np.concatenate(([0], np.cumsum(cols["nb"]))).astype(np.int32),
-                type=pa.int32(),
-            )
-
-            def _list(vals, typ):
-                return pa.ListArray.from_arrays(boffs, pa.array(vals, type=typ))
-
-            arrays = [
-                pc.take(uniq, pa.array(codes_s[starts])),
-                pa.array(cols["df"], type=pa.int64()),
-                pa.array(cols["ids"], type=pa.binary()),
-                pa.array(cols["tfs"], type=pa.binary()),
-                pa.array(cols["dls"], type=pa.binary()),
-                _list(cols["block_firsts"], pa.int64()),
-                _list(cols["block_lasts"], pa.int64()),
-                _list(cols["block_lens"], pa.int32()),
-                _list(cols["ids_offs"], pa.int64()),
-                _list(cols["tfs_offs"], pa.int64()),
-                _list(cols["dls_offs"], pa.int64()),
-                _list(cols["block_max"], pa.float64()),
-                pa.array(tbs[order][starts].astype(np.int32), type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=_postings_arrow_schema())
 
         dict_boffs = dict_info["boffs"] if dict_info is not None else None
 
@@ -1318,23 +1148,6 @@ class IndexBuilder:
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=_tid_postings_arrow_schema())
 
-        if strategy == "salted-groupby":
-            cold_tf = tf.filter(~F.col("term").isin(hot_terms)) if hot_terms else tf
-            cold = cold_tf.groupBy("term").applyInPandas(encode_whole, POSTINGS_SCHEMA)
-            partial = (
-                tf.filter(F.col("term").isin(hot_terms))
-                .groupBy("term", "chunk")
-                .applyInPandas(encode_partial, PARTIAL_SCHEMA)
-                if hot_terms
-                else None
-            )
-        elif strategy == "shuffle-encode":
-            cold = None
-            partial = None
-        else:  # local-merge
-            cold = None
-            partial = tf.mapInPandas(encode_local, PARTIAL_SCHEMA)
-
         def _chunk_dict(r) -> dict:
             return {
                 "df": int(r.df),
@@ -1349,12 +1162,6 @@ class IndexBuilder:
                 "dls_offs": list(r.dls_offs),
                 "block_max": list(r.block_max),
             }
-
-        def merge_term(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            (term,) = key
-            pdf = pdf.sort_values("chunk", kind="mergesort")
-            chunks = [_chunk_dict(r) for r in pdf.itertuples()]
-            return pd.DataFrame([_merge_term_chunks(term, chunks, block_size, avgdl)])
 
         def merge_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             """Merge ALL terms of one term-hash bucket in a single pandas
@@ -1408,7 +1215,7 @@ class IndexBuilder:
                     idxs = order[starts[ti] : ends[ti]]
                     chunks = [_chunk_dict(r) for r in pdf.iloc[idxs].itertuples()]
                     merged_rows.append(
-                        _merge_term_chunks(terms_s[starts[ti]], chunks, block_size, avgdl)
+                        _merge_term_chunks(terms_s[starts[ti]], chunks)
                     )
                 frames.append(pd.DataFrame(merged_rows)[keep_cols])
             out = (
@@ -1420,14 +1227,7 @@ class IndexBuilder:
             out["tb"] = int(tb)
             return out
 
-        if strategy == "salted-groupby":
-            merged = cold
-            if partial is not None:
-                hot_merged = partial.groupBy("term").applyInPandas(merge_term, POSTINGS_SCHEMA)
-                merged = hot_merged if merged is None else merged.unionByName(hot_merged)
-            merged = merged.withColumn("tb", F.pmod(F.hash(F.col("term")), F.lit(n_buckets)))
-            merged = merged.repartition(n_buckets, "tb")
-        elif strategy == "shuffle-encode":
+        if strategy == "shuffle-encode":
             # ONE shuffle of the raw tf stream, routed through identity-
             # partition probe keys so each bucket lands whole — and ALONE —
             # in its shuffle partition. This replaces repartitionByRange
@@ -1436,59 +1236,35 @@ class IndexBuilder:
             # put 2-4 buckets in one partition — a straggler at one-wave
             # parallelism).
             #
-            # Default (tid path): a broadcast map-join swaps the term string
-            # for its dense dictionary id BEFORE the exchange, so the
-            # shuffled row is (tid, doc_id, meta, pk) — four 8-byte slots,
-            # ~1/3 fewer uncompressed bytes than with the UTF-8 term column,
-            # and the whole-bucket encode becomes string-free (VERDICT r4
-            # #1: shuffled bytes, not CPU, capped build scaling). The term
-            # column is restored on the per-TERM output rows (|vocabulary|
-            # rows, not |postings|) by a second broadcast join. Above the
-            # dictionary-size gate the legacy string-shuffle path keeps the
-            # build working without a driver-sized broadcast.
-            dict_cap = int(os.environ.get("SPARK_GRAFT_S2_MAX_DICT_TERMS", 20_000_000))
-            use_tid = dict_info is not None and dict_info["n_vocab"] <= dict_cap
-            self._tid_dict_used = use_tid
-            if use_tid:
-                dict_df = dict_info["dict_df"]
-                merged_tid = (
-                    tf.join(F.broadcast(dict_df), "term")
-                    .select("tid", "doc_id", "meta", "pk")
-                    .repartition(n_buckets, "pk")
-                    .drop("pk")
-                    .mapInArrow(encode_bucket_tid, TID_POSTINGS_SCHEMA)
+            # A broadcast map-join swaps the term string for its dense
+            # dictionary id BEFORE the exchange, so the shuffled row is
+            # (tid, doc_id, meta, pk) — four 8-byte slots, ~1/3 fewer
+            # uncompressed bytes than with the UTF-8 term column, and the
+            # whole-bucket encode is string-free (shuffled bytes, not CPU,
+            # capped build scaling; BENCH/TID_AB.json). The term column is
+            # restored on the per-TERM output rows (|vocabulary| rows, not
+            # |postings|) by a second broadcast join.
+            dict_df = dict_info["dict_df"]
+            merged_tid = (
+                tf.join(F.broadcast(dict_df), "term")
+                .select("tid", "doc_id", "meta", "pk")
+                .repartition(n_buckets, "pk")
+                .drop("pk")
+                .mapInArrow(encode_bucket_tid, TID_POSTINGS_SCHEMA)
+            )
+            merged = (
+                merged_tid.join(F.broadcast(dict_df.select("tid", "term")), "tid")
+                .select(
+                    "term", "df", "ids", "tfs", "dls", "block_firsts",
+                    "block_lasts", "block_lens", "ids_offs", "tfs_offs",
+                    "dls_offs", "block_max", "tb",
                 )
-                merged = (
-                    merged_tid.join(F.broadcast(dict_df.select("tid", "term")), "tid")
-                    .select(
-                        "term", "df", "ids", "tfs", "dls", "block_firsts",
-                        "block_lasts", "block_lens", "ids_offs", "tfs_offs",
-                        "dls_offs", "block_max", "tb",
-                    )
-                )
-            else:
-                from ..murmur import identity_partition_keys
-
-                route = F.element_at(
-                    F.array(
-                        *[F.lit(int(j)) for j in identity_partition_keys(n_buckets)]
-                    ),
-                    F.col("tb") + 1,
-                )
-                merged = (
-                    tf.withColumn(
-                        "tb", F.pmod(F.hash(F.col("term")), F.lit(n_buckets)).cast("int")
-                    )
-                    .withColumn("pk", route)
-                    .repartition(n_buckets, "pk")
-                    .drop("pk")
-                    .mapInArrow(encode_bucket_arrow, POSTINGS_SCHEMA + ", tb int")
-                )
+            )
         else:
             # local-merge: assign tb BEFORE the merge so ONE shuffle both
             # co-locates each term's chunks and lands them in their final
             # bucket; the write needs no further repartition
-            partial_tb = partial.withColumn(
+            partial_tb = tf.mapInPandas(encode_local, PARTIAL_SCHEMA).withColumn(
                 "tb", F.pmod(F.hash(F.col("term")), F.lit(n_buckets))
             )
             merged = partial_tb.groupBy("tb").applyInPandas(
@@ -1497,8 +1273,7 @@ class IndexBuilder:
         t_w0 = time.time()
         # bracket the write job's exchange volume (best-effort, from the JVM
         # status store): the raw-tf shuffle executes inside this job, so the
-        # before/after delta IS the stage-2 shuffled-byte count — the direct
-        # evidence for the tid-vs-string bandwidth claim (VERDICT r4 #1)
+        # before/after delta IS the stage-2 shuffled-byte count
         from ..session import jvm_shuffle_write_bytes
 
         sw_before = jvm_shuffle_write_bytes(spark)
@@ -1549,7 +1324,6 @@ class IndexBuilder:
                 "n_vocab": dict_info["n_vocab"],
                 "max_bucket_rows": dict_info["max_bucket_rows"],
                 "dict_sec": round(dict_info["seconds"], 2),
-                "tid_dict": bool(getattr(self, "_tid_dict_used", False)),
             }
         ckpt.write_stage(
             self.index_dir,
@@ -1564,16 +1338,12 @@ class IndexBuilder:
                 "n_terms": sum(per_bucket.values()),
                 "n_postings": sum(int(r["posts"] or 0) for r in rows),
                 "max_df": max((int(r["mx"] or 0) for r in rows), default=0),
-                "strategy": strategy,            # resolved ('auto' never persists)
-                "strategy_configured": self.strategy,
-                "salt_chunk_span": chunk_span,
-                "hot_df_threshold": hot_threshold,
-                "n_hot_terms": len(hot_terms),
+                "strategy": strategy,
                 "terms_per_bucket": per_bucket,
                 "write_job_sec": round(t_write, 2),
                 "stats_job_sec": round(t_stats, 2),
-                # raw-tf exchange volume (None when the status store is
-                # unreachable); tid vs string A/B evidence, see BENCH/tid_ab.py
+                # stage-2 exchange volume (None when the status store is
+                # unreachable)
                 "shuffle_write_bytes": shuffle_bytes,
                 "seconds": time.time() - t0,
             },

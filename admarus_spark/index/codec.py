@@ -8,9 +8,10 @@ its first doc id absolute (``block_firsts``) and within-block gaps
 varint-encoded; tfs and doc lengths are varint streams; a per-block maximum
 of the BM25 tf-saturation term is kept for block-max WAND skipping.
 
-Blocks are self-contained (no cross-block deltas) so salted partial builds of
-a hot term can be merged by plain block-list concatenation — the skew story
-(SURVEY.md §2.3 A2, §4 O10/O11).
+Blocks are self-contained (no cross-block deltas), so the per-partition
+chunks of a term that the build's ``local-merge`` encode produces can be
+merged by plain block-list concatenation — the skew story (SURVEY.md §2.3
+A2, §4 O10/O11).
 
 Everything is vectorized NumPy (runs inside Arrow-batched Spark UDFs; no
 per-row Python).
@@ -336,12 +337,15 @@ def decode_postings(
 
 
 def merge_encoded_chunks(chunks: list[dict]) -> dict:
-    """Merge salted partial encodings of one term.
+    """Merge the per-partition encodings of one term (``local-merge``).
 
-    Chunks must cover disjoint, ascending doc_id ranges (range-salting
-    guarantees this). Blocks are self-contained, so the merge is pure
-    concatenation with offset shifting — the cheap hot-term merge required
-    by the north rule.
+    Each chunk holds the term's postings from one tf partition, so chunks
+    hold disjoint doc ids but their id ranges may interleave. Blocks are
+    self-contained and carry their own ``block_firsts`` / ``block_lasts``
+    bounds, so the merge is pure concatenation with offset shifting — the
+    cheap hot-term merge required by the north rule. Readers never infer a
+    block's range from its neighbour, and sort decoded ids where order
+    matters.
     """
     out = {
         "ids_blob": b"".join(c["ids_blob"] for c in chunks),

@@ -31,9 +31,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import BM25_B, BM25_K1, FILTER_BITS
+from .. import BM25_B, BM25_K1
 from ..hashword import filter_get
-from ..index.build import IndexPaths, heal_swap
+from ..index import checkpoint as _ckpt
+from ..index.build import IndexPaths, check_layout, heal_swap
 from ..index.codec import decode_postings
 from ..murmur import identity_partition_keys, term_bucket
 from ..oracle import bm25_idf
@@ -77,6 +78,7 @@ class SearchEngine:
                    self.paths.postings, self.paths.doc_dict):
             if not os.path.isdir(_p):
                 heal_swap(_p)
+        check_layout(self.paths)
         stats = spark.read.parquet(self.paths.stats).collect()[0]
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
@@ -107,49 +109,21 @@ class SearchEngine:
         # scales with the corpus, so eagerly materializing every bucket's
         # 125 KB bloom would cost O(n_buckets) driver heap and a slow init
         # at 100 TB scale. Per-bucket blooms load lazily, one pruned collect
-        # per batch of queried buckets. Legacy indexes without the global
-        # row fall back to the eager full load.
+        # per batch of queried buckets.
         self._summaries = spark.read.parquet(self.paths.summaries)
         self.bucket_blooms: dict[int, np.ndarray] = {}
         self._absent_buckets: set[int] = set()
-        self.meta_bloom = np.zeros(FILTER_BITS // 8, dtype=np.uint8)
-        global_terms: np.ndarray | None = None
-        for r in self._summaries.filter(F.col("kind").isin("meta", "global")).collect():
-            filt = np.frombuffer(r["filter"], dtype=np.uint8)
-            if r["kind"] == "meta":
-                self.meta_bloom = filt
-            else:
-                global_terms = filt
-        self._lazy_blooms = global_terms is not None
-        if not self._lazy_blooms:
-            for r in self._summaries.filter(F.col("kind") == "terms").collect():
-                self.bucket_blooms[int(r["tb"])] = np.frombuffer(r["filter"], dtype=np.uint8)
-            blooms = list(self.bucket_blooms.values())
-            global_terms = (
-                np.bitwise_or.reduce(blooms) if blooms else np.zeros(FILTER_BITS // 8, np.uint8)
-            )
-        self.global_bloom = np.bitwise_or(global_terms, self.meta_bloom)
-        from ..index import checkpoint as _ckpt
-
+        rollup = {
+            r["kind"]: np.frombuffer(r["filter"], dtype=np.uint8)
+            for r in self._summaries.filter(F.col("kind").isin("meta", "global")).collect()
+        }
+        self.meta_bloom = rollup["meta"]
+        self.global_bloom = np.bitwise_or(rollup["global"], self.meta_bloom)
         stage2 = _ckpt.read_metrics(index_dir, "stage2_postings")
-        # n_buckets is the ROUTING modulus: it must be the configured bucket
-        # count, not max(occupied)+1 — a trailing bucket with zero terms
-        # writes no partition/summary row, and inferring from occupancy would
-        # route every term with the wrong modulus (silently empty results).
-        # Persisted in stage2 metrics; occupancy inference is the legacy
-        # fallback for pre-r2 indexes only.
-        n_b = stage2.get("n_buckets")
-        if n_b is not None:
-            self.n_buckets = int(n_b)
-        else:
-            # legacy fallback (pre-r2 index without stage2 metrics): infer
-            # from the summaries table, NOT the in-memory bloom dict — under
-            # lazy-bloom init the dict is empty at this point and max()+1
-            # would silently route every term with modulus 1 (ADVICE r3)
-            mx = self._summaries.filter(F.col("kind") == "terms").agg(
-                F.max("tb")
-            ).collect()[0][0]
-            self.n_buckets = int(mx) + 1 if mx is not None else 1
+        # n_buckets is the ROUTING modulus: the configured bucket count,
+        # never max(occupied)+1 — a trailing bucket with zero terms writes
+        # no partition/summary row
+        self.n_buckets = int(stage2["n_buckets"])
         # dictionary cache: for small dictionaries, (term -> df) is loaded
         # once at init so queries skip the per-query df-collect job; at
         # billion-term scale this stays lazy (per-query pruned collect).
@@ -297,8 +271,6 @@ class SearchEngine:
         collect for all missing buckets, cached for the engine's lifetime.
         Buckets with no summary row (zero terms landed there) are cached as
         absent so they are never re-queried."""
-        if not self._lazy_blooms:
-            return
         missing = [
             tb
             for tb in tbs
@@ -751,13 +723,9 @@ class SearchEngine:
             F.col("tb").isin(buckets) & F.col("term").isin(terms)
         )
         cols = [
-            "term", "ids", "tfs", "dls",
-            "block_firsts", "block_lens", "ids_offs", "tfs_offs", "dls_offs",
-            "block_max",
+            "term", "ids", "tfs", "dls", "block_firsts", "block_lasts",
+            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
         ]
-        has_lasts = "block_lasts" in pruned.columns
-        if has_lasts:
-            cols.append("block_lasts")
         case = (
             "CASE "
             + " ".join(
@@ -769,7 +737,7 @@ class SearchEngine:
             + " END"
         )
         src = pruned.select(*cols).withColumn("gk", F.explode(F.expr(case)))
-        if key_range and has_lasts:
+        if key_range:
             # drop replicas whose whole row misses the shard's id range —
             # per-block masks inside evaluate_group re-check exactly
             lo_case = (
@@ -946,7 +914,7 @@ class SearchEngine:
         argument as the per-term greedy, SURVEY.md §7.4).
 
         Returns {term: bool keep-mask} or None when not applicable (a term
-        split across multiple postings rows — legacy/mid-compaction layout —
+        split across multiple postings rows — pending update generations —
         where row-aligned masks cannot be keyed by term alone; or a term
         whose blob exceeds the driver-fetch cap ``bmw_max_term_df``; or the
         θ probe loop exhausting its block budget — which happens exactly
@@ -968,12 +936,9 @@ class SearchEngine:
     def _collect_block_meta(self, pruned: DataFrame):
         """Per-term block metadata for driver-side mask computation (one
         KB-scale collect for the whole query/batch). None when a term is
-        split across rows (legacy/mid-compaction layout — masks cannot be
-        keyed by term alone) or the index predates per-block id bounds
-        (pre-r2 layout without ``block_lasts`` — callers fall back to the
-        per-term greedy, which never reads the bounds)."""
-        if "block_lasts" not in pruned.columns:
-            return None
+        split across rows (pending generations of incremental updates —
+        masks cannot be keyed by term alone; callers fall back to the
+        per-term greedy)."""
         meta = pruned.select(
             "term", "block_max", "block_firsts", "block_lasts"
         ).collect()
@@ -1285,7 +1250,7 @@ class SearchEngine:
                 full_terms.update(qterms)
         by_term = self._collect_block_meta(pruned) if (bmw_q or cand_q) else None
         if by_term is None:
-            # legacy/split-row layout (or no member wants driver masks):
+            # split-row terms (or no member wants driver masks):
             # max-fold members degrade to the executor greedy, conjunctive
             # members to full decode
             for _, qterms, _qdf in bmw_q:
@@ -1404,14 +1369,9 @@ class SearchEngine:
         last_i] intersects the candidate set, and decoded rows outside the
         set are dropped — exact, because every true match is a candidate."""
         cols = [
-            "term", "ids", "tfs", "dls",
-            "block_firsts", "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
+            "term", "ids", "tfs", "dls", "block_firsts", "block_lasts",
+            "block_lens", "ids_offs", "tfs_offs", "dls_offs", "block_max",
         ]
-        # block_lasts: per-block id upper bounds (r2 schema). Legacy indexes
-        # without it decode all blocks; the row filter keeps exactness.
-        has_lasts = "block_lasts" in pruned.columns
-        if has_lasts:
-            cols.append("block_lasts")
         src = pruned.select(*cols)
         k1, b, avgdl = BM25_K1, BM25_B, self.avgdl
 
@@ -1438,7 +1398,7 @@ class SearchEngine:
                             keep = bm
                         if keep is not None and keep.all():
                             keep = None  # full decode, skip the gather path
-                    elif cand is not None and has_lasts:
+                    elif cand is not None:
                         keep = _select_blocks_intersect(r, cand)
                     ids, tfs, dls = decode_postings(
                         r.ids, r.tfs, r.dls, r.block_firsts, r.block_lens,

@@ -7,6 +7,46 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (the CPU affinity mask, not the
+    machine's core count: a container or taskset pins fewer)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def default_driver_mem(mem_total_bytes: int | None = None) -> str:
+    """Driver heap derived from the machine: half of ``MemTotal``, capped
+    at 24g, at least 1g. The heap is pinned (``-Xms = -Xmx``) and
+    pre-touched, so it must fit the host it runs on."""
+    if mem_total_bytes is None:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+        mem_total_bytes = kb * 1024
+    mb = mem_total_bytes // 2 // (1 << 20)
+    return f"{max(1024, min(24 * 1024, mb))}m"
+
+
+def session_sizing() -> tuple[str, str]:
+    """(cores, driver memory) for a locally-owned session:
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    derived from the host."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus())
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
+    return cpus, mem
+
+
+def driver_java_options(mem: str) -> str:
+    """Driver JVM flags. ``-Xms`` pinned to ``-Xmx`` plus pre-touch: Spark
+    only sets -Xmx, so the heap grows mid-run and every G1 expansion
+    commits+zeroes GBs inside stop-the-world pauses (observed as 20s+
+    stalls at 95% system time); one-time startup pretouch instead. The
+    locale is pinned so Catalyst ``lower()`` matches the Python tokenizer
+    (a tr/az default locale maps 'I' to a dotless i)."""
+    return f"-Xms{mem} -XX:+AlwaysPreTouch -Duser.language=en -Duser.country=US"
+
+
 def _local_shuffle_partitions(master: str | None) -> int | None:
     """Core count implied by a plain-local master string, else None.
 
@@ -53,8 +93,9 @@ def get_spark(
     # any shell that sourced load-spark-env.sh — e.g. docker entrypoints —
     # where no gateway exists and a master must still be synthesized.)
     launcher_owned = bool(os.environ.get("PYSPARK_GATEWAY_PORT"))
+    cpus, driver_mem = session_sizing()
     if master is None and not launcher_owned:
-        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        master = f"local[{cpus}]"
     # local[N] → match shuffle partitions to cores (guide: not 200). ONLY
     # for local masters: on a real cluster the right number depends on
     # executors that may not have registered yet (early defaultParallelism
@@ -88,16 +129,9 @@ def get_spark(
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.factory.idleWorkerMaxPoolSize", "64")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.driver.maxResultSize", "4g")
-        # Pin -Xms to -Xmx and pre-touch at startup: Spark only sets -Xmx,
-        # so the heap grows mid-run and every G1 expansion commits+zeroes
-        # GBs inside stop-the-world pauses (observed as 20s+ stalls at 95%
-        # system time). One-time startup pretouch instead.
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '24g')} -XX:+AlwaysPreTouch",
-        )
+        .config("spark.driver.extraJavaOptions", driver_java_options(driver_mem))
     )
     # Worker daemon that pre-imports the heavy stack (daemon_prewarm.py) so
     # cold forks skip the ~1s pandas/numpy/pyarrow import. The daemon

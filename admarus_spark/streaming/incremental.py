@@ -63,6 +63,7 @@ from ..index.build import (
     IndexBuilder,
     IndexPaths,
     _tokenize_tf_map,
+    check_layout,
     heal_swap as _heal_swap,
     max_tuple_dedup as _max_tuple_dedup,
     swap_dir as _swap_dir,
@@ -123,6 +124,8 @@ class IncrementalIndexer:
         _heal_swap(paths.doc_dict)
         _heal_swap(paths.stats)
         _heal_swap(paths.summaries)
+        # before any write: every artifact below assumes the current layout
+        check_layout(paths)
         t0 = time.time()
         stats = spark.read.parquet(paths.stats).collect()[0]
         dd = spark.read.parquet(paths.doc_dict)
@@ -287,30 +290,17 @@ class IncrementalIndexer:
         tf = tf_all.filter(F.col("term") != MARKER_TERM)
         bm_avgdl = float(stats["bm_avgdl"]) if "bm_avgdl" in stats.__fields__ else float(stats["avgdl"])
         block_size = self.block_size
-        old = spark.read.parquet(paths.postings)
-        if "block_lasts" not in old.columns:
-            # fail FAST on legacy pre-r2 indexes (no per-block id bounds):
-            # the merge below reads block_lasts unconditionally, and dying
-            # mid-write would corrupt the bucket partitions (ADVICE r2)
-            raise ValueError(
-                "legacy index without block_lasts metadata: incremental "
-                "update unsupported — run a full rebuild first"
-            )
         # the routing modulus comes from the persisted stage2 metrics — NEVER
         # from max(occupied tb)+1, which under-counts when the highest bucket
         # happens to hold zero terms (and would write the same term under a
         # second tb, splitting its postings)
         from ..index import checkpoint as ckpt
 
-        n_b = ckpt.read_metrics(self.index_dir, "stage2_postings").get("n_buckets")
-        if n_b is not None:
-            n_buckets = int(n_b)
-        else:  # legacy pre-r2 index: occupancy inference
-            n_buckets = int(old.agg(F.max("tb")).collect()[0][0] or 0) + 1
+        n_buckets = int(ckpt.read_metrics(self.index_dir, "stage2_postings")["n_buckets"])
 
         # encode the delta's postings with ONE whole-partition pass per
         # term-bucket group (the pandas twin of the full build's
-        # encode_bucket_arrow) — a per-TERM applyInPandas would pay Spark/
+        # encode_bucket_tid) — a per-TERM applyInPandas would pay Spark/
         # Arrow group overhead x |delta vocabulary| (the anti-pattern the r3
         # batched codec removed from the full build)
         def encode_delta(batches):
@@ -645,6 +635,7 @@ class IncrementalIndexer:
         _heal_swap(paths.doc_dict)
         _heal_swap(paths.stats)
         _heal_swap(paths.summaries)
+        check_layout(paths)
         t0 = time.time()
         tomb_path = os.path.join(self.index_dir, "tombstones")
         gen_path = os.path.join(self.index_dir, "generations")
@@ -795,10 +786,6 @@ class IncrementalIndexer:
             )
 
         post = spark.read.parquet(paths.postings)
-        if "block_lasts" not in post.columns:
-            raise ValueError(
-                "legacy index without block_lasts metadata: run a full rebuild"
-            )
         multi_bc = None
         if has_gens:
             # append updates leave a term's generations in SEPARATE files,

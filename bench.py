@@ -25,7 +25,7 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def main() -> None:
@@ -75,7 +75,7 @@ def main() -> None:
         idx_dir = f"/tmp/admarus_bench_idx_{os.getpid()}_{rnd}"
         shutil.rmtree(idx_dir, ignore_errors=True)
         t0 = time.time()
-        IndexBuilder(spark, idx_dir, n_buckets=32, salt_chunks=8).build(
+        IndexBuilder(spark, idx_dir, n_buckets=32).build(
             docs, input_token=f"bench:{SF_DIR}:{time.time()}", resume=False
         )
         times["index_build"] = time.time() - t0

@@ -16,7 +16,7 @@ import os
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def noop(df):

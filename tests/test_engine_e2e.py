@@ -8,6 +8,7 @@ import pytest
 
 from admarus_spark.index import checkpoint as ckpt
 from admarus_spark.index.build import IndexBuilder
+from admarus_spark.oracle import OracleIndex
 from admarus_spark.search.engine import SearchEngine
 
 MOVIES_QUERIES = [
@@ -76,85 +77,21 @@ def test_wand_rank_safe_large_k(docs_engine, docs_oracle):
 
 
 def test_partition_count_invariance(spark, docs_pdf, docs_oracle, tmp_path):
-    """Same corpus indexed with different bucket/salt/partition settings
-    must produce identical query results (SURVEY.md §5 test plan b)."""
+    """Same corpus indexed with different bucket/partition settings must
+    produce identical query results (SURVEY.md §5 test plan b)."""
     d = str(tmp_path / "idx_alt")
-    # exercises the explicit df-salted strategy (the default engine path is
-    # auto -> shuffle-encode); both must give identical results
-    IndexBuilder(
-        spark, d, n_buckets=3, salt_chunks=1, hot_df_threshold=10,
-        strategy="salted-groupby",
-    ).build(spark.createDataFrame(docs_pdf).repartition(17), input_token="alt")
+    IndexBuilder(spark, d, n_buckets=3).build(
+        spark.createDataFrame(docs_pdf).repartition(17), input_token="alt"
+    )
     eng = SearchEngine(spark, d)
     run_parity(eng, docs_oracle, ["license", "license AND parser", "2(parser, lexer, bloom)"])
 
 
-def test_shuffle_encode_strategy_parity(spark, docs_pdf, docs_oracle, tmp_path):
-    """The single-shuffle whole-bucket Arrow encode strategy must produce
-    bit-identical query results to the oracle (and hence to local-merge)."""
-    d = str(tmp_path / "idx_se")
-    b = IndexBuilder(
-        spark, d, n_buckets=8, salt_chunks=2, strategy="shuffle-encode"
-    )
-    b.build(spark.createDataFrame(docs_pdf), input_token="se")
-    assert b.metrics["stage2_postings"]["strategy"] == "shuffle-encode"
-    eng = SearchEngine(spark, d)
-    run_parity(
-        eng,
-        docs_oracle,
-        ["license", "license AND parser", "2(parser, lexer, bloom)",
-         "parser lexer bloom", "parser AND NOT bloom", "lang=python AND bloom"],
-    )
-
-
-def test_tid_dict_parity_with_string_path(spark, docs_pdf, docs_oracle, tmp_path, monkeypatch):
-    """The tid-dictionary shuffle (default) and the legacy string-shuffle
-    fallback must produce the SAME postings table — identical per-term blobs
-    and block metadata — and identical query results. Forces the fallback by
-    zeroing the dictionary-size gate."""
-    d1 = str(tmp_path / "idx_tid")
-    b1 = IndexBuilder(spark, d1, n_buckets=8, strategy="shuffle-encode")
-    b1.build(spark.createDataFrame(docs_pdf), input_token="tid")
-    assert b1.metrics["stage2_postings"]["tid_dict"] is True
-
-    monkeypatch.setenv("SPARK_GRAFT_S2_MAX_DICT_TERMS", "0")
-    d2 = str(tmp_path / "idx_str")
-    b2 = IndexBuilder(spark, d2, n_buckets=8, strategy="shuffle-encode")
-    b2.build(spark.createDataFrame(docs_pdf), input_token="str")
-    assert b2.metrics["stage2_postings"]["tid_dict"] is False
-
-    cols = [
-        "term", "df", "ids", "tfs", "dls", "block_firsts", "block_lasts",
-        "block_lens", "ids_offs", "tfs_offs", "dls_offs", "tb",
-    ]
-
-    def snapshot(d):
-        rows = spark.read.parquet(d + "/postings").select(*cols).collect()
-        return sorted(
-            (tuple(bytes(r[c]) if isinstance(r[c], (bytes, bytearray)) else
-                   (tuple(r[c]) if isinstance(r[c], list) else r[c]) for c in cols))
-            for r in rows
-        )
-
-    assert snapshot(d1) == snapshot(d2)
-    run_parity(
-        SearchEngine(spark, d2), docs_oracle,
-        ["license", "license AND parser", "parser lexer bloom"],
-    )
-    # the point of the tid swap: the raw-tf exchange ships fewer bytes than
-    # the string-keyed exchange for the SAME posting rows (measured from the
-    # JVM status store; best-effort — skip the comparison if unavailable)
-    tid_bytes = b1.metrics["stage2_postings"]["shuffle_write_bytes"]
-    str_bytes = b2.metrics["stage2_postings"]["shuffle_write_bytes"]
-    if tid_bytes is not None and str_bytes is not None:
-        assert 0 < tid_bytes < str_bytes
-
-
 def test_auto_guard_uses_largest_bucket(spark, tmp_path, monkeypatch):
-    """The 'auto' memory guard must gate on the LARGEST bucket, not the
-    cross-bucket mean (ADVICE r4): with a cap between the two, a skewed
-    vocabulary (every doc shares one hot term) must fall back to
-    local-merge even though the mean estimate fits."""
+    """The explicit skew test. The encode choice must gate on the LARGEST
+    bucket, not the cross-bucket mean: with a cap between the two, a skewed
+    vocabulary (every doc shares one hot term) must take local-merge even
+    though the mean estimate fits — and that index must match the oracle."""
     import pandas as pd
 
     pdf = pd.DataFrame(
@@ -181,33 +118,39 @@ def test_auto_guard_uses_largest_bucket(spark, tmp_path, monkeypatch):
     b2 = IndexBuilder(spark, d2, n_buckets=8)
     b2.build(spark.createDataFrame(pdf), input_token="skewguard")
     assert b2.metrics["stage2_postings"]["strategy"] == "local-merge"
+    run_parity(
+        SearchEngine(spark, d2), OracleIndex(pdf),
+        ["hotterm", "uniq00007term", "hotterm AND uniq00042term",
+         "hotterm uniq00299term", "2(hotterm, uniq00001term, uniq00002term)",
+         "hotterm AND NOT uniq00100term"],
+    )
 
 
 def test_auto_strategy_resolution(spark, docs_pdf, docs_oracle, tmp_path, monkeypatch):
-    """'auto' resolves to shuffle-encode when the estimated per-bucket bytes
-    fit the cap, and falls back to local-merge above it — with identical
-    query results either way (the guard is a physical-plan decision only)."""
+    """Stage 2 takes shuffle-encode when the largest bucket fits the cap and
+    local-merge above it — with identical query results either way (the
+    choice is a physical-plan decision only)."""
     d1 = str(tmp_path / "idx_auto_se")
-    b1 = IndexBuilder(spark, d1, n_buckets=8, salt_chunks=2)  # default: auto
+    b1 = IndexBuilder(spark, d1, n_buckets=8)
     b1.build(spark.createDataFrame(docs_pdf), input_token="auto1")
     assert b1.metrics["stage2_postings"]["strategy"] == "shuffle-encode"
-    assert b1.metrics["stage2_postings"]["strategy_configured"] == "auto"
 
-    monkeypatch.setenv("SPARK_GRAFT_S2_MAX_BUCKET_BYTES", "1")  # force fallback
+    monkeypatch.setenv("SPARK_GRAFT_S2_MAX_BUCKET_BYTES", "1")  # force local-merge
     d2 = str(tmp_path / "idx_auto_lm")
-    b2 = IndexBuilder(spark, d2, n_buckets=8, salt_chunks=2)
+    b2 = IndexBuilder(spark, d2, n_buckets=8)
     b2.build(spark.createDataFrame(docs_pdf), input_token="auto2")
     assert b2.metrics["stage2_postings"]["strategy"] == "local-merge"
     for d in (d1, d2):
         run_parity(
             SearchEngine(spark, d), docs_oracle,
-            ["license", "parser lexer bloom", "license AND parser"],
+            ["license", "license AND parser", "2(parser, lexer, bloom)",
+             "parser lexer bloom", "parser AND NOT bloom", "lang=python AND bloom"],
         )
 
 
 def test_resume_skips_completed_stages(spark, movies_pdf, tmp_path):
     d = str(tmp_path / "idx_resume")
-    b = IndexBuilder(spark, d, n_buckets=4, salt_chunks=2)
+    b = IndexBuilder(spark, d, n_buckets=4)
     docs = spark.createDataFrame(movies_pdf)
     b.build(docs, input_token="r1")
     s1 = b.metrics["stage1_tokenize"]["wall_clock_completed"]
@@ -228,7 +171,7 @@ def test_sha_validation_excludes_rows(spark, movies_pdf, tmp_path):
     # LocalRelation (where sha2 would vanish from the plan either way)
     src = str(tmp_path / "docs_sha.parquet")
     spark.createDataFrame(bad).write.parquet(src)
-    b = IndexBuilder(spark, d, n_buckets=4, salt_chunks=2)
+    b = IndexBuilder(spark, d, n_buckets=4)
     b.build(spark.read.parquet(src), input_token="sha")
     m = b.metrics["stage1_tokenize"]
     assert m["rows_invalid_sha"] == 1
@@ -270,7 +213,7 @@ def test_duplicate_input_paths_deduped_to_max_sha_winner(
     d = str(tmp_path / "idx_dup")
     src = str(tmp_path / "docs_dup.parquet")
     spark.createDataFrame(dirty).write.parquet(src)
-    b = IndexBuilder(spark, d, n_buckets=4, salt_chunks=2)
+    b = IndexBuilder(spark, d, n_buckets=4)
     b.build(spark.read.parquet(src), input_token="dup")
     m = b.metrics["stage1_tokenize"]
     assert m["rows_dup_path"] == 1
@@ -305,7 +248,7 @@ def test_duplicate_with_junk_sha_never_shadows_valid_row(
 
     oracle = OracleIndex(movies_pdf)  # the valid originals, nothing lost
     d = str(tmp_path / "idx_junkdup")
-    b = IndexBuilder(spark, d, n_buckets=4, salt_chunks=2)
+    b = IndexBuilder(spark, d, n_buckets=4)
     b.build(spark.createDataFrame(dirty), input_token="junkdup")
     m = b.metrics["stage1_tokenize"]
     assert m["rows_dup_path"] == 1
@@ -329,7 +272,7 @@ def test_duplicate_equal_sha_winner_is_deterministic(spark, movies_pdf, tmp_path
 
     for token in ("eqsha-a", "eqsha-b"):
         d = str(tmp_path / f"idx_{token}")
-        b = IndexBuilder(spark, d, n_buckets=4, salt_chunks=2)
+        b = IndexBuilder(spark, d, n_buckets=4)
         b.build(spark.createDataFrame(dirty), input_token=token)
         dd = spark.read.parquet(d + "/doc_dict").toPandas()
         row = dd[dd["path"] == key_path]
@@ -430,7 +373,7 @@ def test_empty_top_bucket_routing(spark, movies_pdf, movies_oracle, tmp_path):
     highest buckets hold zero terms and write no partition/summary row —
     occupancy inference would mis-route every term (ADVICE r1, medium)."""
     d = str(tmp_path / "idx_many_buckets")
-    IndexBuilder(spark, d, n_buckets=512, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=512).build(
         spark.createDataFrame(movies_pdf), input_token="many-buckets"
     )
     eng = SearchEngine(spark, d)
@@ -452,7 +395,7 @@ def test_manifest_broadcast_gate_off(spark, movies_pdf, movies_oracle, tmp_path)
     -> sort-merge/AQE join path): results must be identical."""
     d = str(tmp_path / "idx_nobc")
     IndexBuilder(
-        spark, d, n_buckets=4, salt_chunks=2, broadcast_manifest_max=0
+        spark, d, n_buckets=4, broadcast_manifest_max=0
     ).build(spark.createDataFrame(movies_pdf), input_token="nobc")
     eng = SearchEngine(spark, d)
     run_parity(eng, movies_oracle, ["hunger", "hunger / games", "lang=en AND hunger"])
@@ -585,7 +528,7 @@ def test_doc_dict_pin_and_refresh_release(spark, movies_pdf, movies_oracle, tmp_
     long-lived serving engine neither leaks cache nor serves a stale
     dictionary snapshot after an external change."""
     d = str(tmp_path / "idx_ddpin")
-    IndexBuilder(spark, d, n_buckets=4, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=4).build(
         spark.createDataFrame(movies_pdf), input_token="ddpin"
     )
     eng = SearchEngine(spark, d)
@@ -649,7 +592,7 @@ def test_zero_term_corpus_builds_empty_index(spark, tmp_path):
         rows, columns=["repo", "path", "commit", "lang", "content", "content_sha256"]
     )
     d = str(tmp_path / "idx_zeroterm")
-    IndexBuilder(spark, d, n_buckets=2, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=2).build(
         spark.createDataFrame(pdf), input_token="zt"
     )
     post = spark.read.parquet(f"{d}/postings")  # readable, typed, empty
@@ -669,7 +612,7 @@ def test_keep_tf_false_cleans_and_resumes(spark, movies_pdf, tmp_path):
     from admarus_spark.oracle import OracleIndex
 
     d = str(tmp_path / "idx_nokeep")
-    b = IndexBuilder(spark, d, n_buckets=4, salt_chunks=2, keep_tf=False)
+    b = IndexBuilder(spark, d, n_buckets=4, keep_tf=False)
     sdf = spark.createDataFrame(movies_pdf)
     b.build(sdf, input_token="nk")
     assert not os.path.exists(f"{d}/tf")
@@ -681,6 +624,6 @@ def test_keep_tf_false_cleans_and_resumes(spark, movies_pdf, tmp_path):
         assert got == oi.search(q, 10), q
 
     # resume with everything checkpointed: no stage re-runs, no tf needed
-    b2 = IndexBuilder(spark, d, n_buckets=4, salt_chunks=2, keep_tf=False)
+    b2 = IndexBuilder(spark, d, n_buckets=4, keep_tf=False)
     b2.build(sdf, input_token="nk")
     assert b2.metrics["stage2_postings"] == b.metrics["stage2_postings"]

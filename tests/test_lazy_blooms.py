@@ -1,18 +1,13 @@
 """Engine init must be O(1) in bucket count: only the meta + global rollup
 summary rows are read at init; per-bucket blooms load lazily for queried
-buckets (VERDICT r2 #4). Legacy indexes without the global row fall back to
-the eager full load with identical results."""
-
-import shutil
-
-from pyspark.sql import functions as F
+buckets (VERDICT r2 #4)."""
 
 from admarus_spark.index.build import IndexBuilder
 from admarus_spark.search.engine import SearchEngine
 
 
 def _build(spark, movies_pdf, d):
-    IndexBuilder(spark, d, n_buckets=8, salt_chunks=2).build(
+    IndexBuilder(spark, d, n_buckets=8).build(
         spark.createDataFrame(movies_pdf), input_token="lazy-blooms"
     )
 
@@ -21,7 +16,6 @@ def test_lazy_bloom_loading(spark, movies_pdf, tmp_path):
     d = str(tmp_path / "idx_lazy")
     _build(spark, movies_pdf, d)
     eng = SearchEngine(spark, d)
-    assert eng._lazy_blooms
     assert eng.bucket_blooms == {}  # init materialized NO per-bucket blooms
     assert eng.search("hunger", 5).count() > 0
     loaded = len(eng.bucket_blooms) + len(eng._absent_buckets)
@@ -31,21 +25,3 @@ def test_lazy_bloom_loading(spark, movies_pdf, tmp_path):
     assert eng.search("zzznotaword", 5).count() == 0
     assert len(eng.bucket_blooms) + len(eng._absent_buckets) == loaded
 
-
-def test_legacy_summaries_eager_fallback(spark, movies_pdf, tmp_path):
-    d = str(tmp_path / "idx_legacy")
-    _build(spark, movies_pdf, d)
-    lazy_res = [
-        (r["doc_id"], r["score"])
-        for r in SearchEngine(spark, d).search("hunger AND games", 10).collect()
-    ]
-    # strip the global rollup row -> pre-r3 summaries layout
-    summ = spark.read.parquet(f"{d}/summaries").filter(F.col("kind") != "global")
-    summ.coalesce(1).write.mode("overwrite").parquet(f"{d}/summaries_legacy")
-    shutil.rmtree(f"{d}/summaries")
-    shutil.move(f"{d}/summaries_legacy", f"{d}/summaries")
-    eng = SearchEngine(spark, d)
-    assert not eng._lazy_blooms
-    assert len(eng.bucket_blooms) > 0  # eager load happened
-    got = [(r["doc_id"], r["score"]) for r in eng.search("hunger AND games", 10).collect()]
-    assert got == lazy_res

@@ -5,7 +5,12 @@ from __future__ import annotations
 
 import os
 
-from admarus_spark.session import _local_shuffle_partitions
+from admarus_spark.session import (
+    _local_shuffle_partitions,
+    default_driver_mem,
+    driver_java_options,
+    session_sizing,
+)
 
 
 def test_local_masters_sized_to_core_count():
@@ -24,6 +29,31 @@ def test_non_local_masters_keep_spark_default():
     assert _local_shuffle_partitions("local-cluster[2,1,1024]") is None
     # unparseable bracket content must not crash session construction
     assert _local_shuffle_partitions("local[abc]") is None
+
+
+def test_session_sized_from_host_unless_env_set(monkeypatch):
+    gib = 1 << 30
+    # half of MemTotal, capped at 24g, floored at 1g
+    assert default_driver_mem(16 * gib) == "8192m"
+    assert default_driver_mem(15 * gib + 700 * (1 << 20)) == "8030m"
+    assert default_driver_mem(128 * gib) == "24576m"
+    assert default_driver_mem(gib) == "1024m"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    cpus, mem = session_sizing()
+    assert cpus == str(len(os.sched_getaffinity(0)))
+    assert mem == default_driver_mem()
+    assert 1024 <= int(mem[:-1]) <= 24 * 1024
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert session_sizing() == ("3", "6g")
+
+
+def test_driver_jvm_flags_pin_heap_and_locale():
+    flags = driver_java_options("6g").split()
+    assert "-Xms6g" in flags and "-XX:+AlwaysPreTouch" in flags
+    # Catalyst lower() must not follow a tr/az default locale
+    assert "-Duser.language=en" in flags and "-Duser.country=US" in flags
 
 
 def test_entry_contract_single_sources_parity_constants():
